@@ -44,6 +44,13 @@ def _load_now() -> float:
         return -1.0
 
 
+def cpus_stamp() -> str:
+    """Cores the bench session runs on: ``$SPARK_GRAFT_CPUS``, or — when
+    that is unset or ``*`` (get_spark's ``local[*]``) — the host's count."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
+    return str(os.cpu_count()) if cpus == "*" else cpus
+
+
 def _sample(spark, sf_dir: str, fn, runs: int
             ) -> tuple[float, dict[str, float]]:
     """One timed sampling pass: best + {median, stdev, max, loadavg_1m}.
@@ -238,7 +245,7 @@ def main() -> None:
     # 32-core artifact (VERDICT r14 "what's wrong" #2); cold per query per
     # the cold-first-sample note above.
     detail = {"best": timings, "spread": spread, "cold": cold,
-              "cpus": os.environ.get("SPARK_GRAFT_CPUS", "*"),
+              "cpus": cpus_stamp(),
               "defaultParallelism": spark.sparkContext.defaultParallelism,
               "sf": sf, "runs": runs,
               "loadavg_1m_start": load_start, "loadavg_1m_end": load_end,

@@ -15,6 +15,7 @@ source database exactly as the reference pushes its generated SQL.
 
 from __future__ import annotations
 
+import os
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -29,6 +30,33 @@ _MISSING = object()  # "no per-table entry" (None is a stored value)
 #: stride_mode="auto" switches to histogram strides when the key span
 #: exceeds this multiple of COUNT(*) — see _derive_partition_options
 _AUTO_SPARSITY_FACTOR = 2
+
+
+def file_signature(path: str | os.PathLike) -> tuple | None:
+    """Driver-side stat of a table path, equal only while its files are.
+
+    A single file gives ``(size, mtime_ns)``; a directory gives the sorted
+    ``(relpath, size, mtime_ns)`` of every file under it, so an appended,
+    removed or rewritten file changes it. ``None`` when the path cannot be
+    stat'ed locally (missing, remote, or a file vanished mid-walk): callers
+    treat that as "cannot validate" and never serve a memoised entry."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    if not os.path.isdir(path):
+        return (st.st_size, st.st_mtime_ns)
+    entries = []
+    for root, _dirs, names in os.walk(path):
+        for name in names:
+            full = os.path.join(root, name)
+            try:
+                fst = os.stat(full)
+            except OSError:  # removed by a concurrent writer
+                return None
+            entries.append((os.path.relpath(full, path), fst.st_size,
+                            fst.st_mtime_ns))
+    return tuple(sorted(entries))
 
 
 class FileCatalog:
@@ -54,7 +82,20 @@ class FileCatalog:
     (measured), so one poison row silently widens affected columns to
     string. With a declared schema, type-corrupt rows are detected and
     (in permissive mode) skipped; with inference, only arity-corrupt rows
-    are."""
+    are.
+
+    Columnar schemas are memoised per instance, ``table -> (signature,
+    StructType)``, where the signature is :func:`file_signature` of the
+    table path (per file: size and mtime_ns; a directory lists every file
+    under it). A load whose signature matches builds its reader with the
+    memoised schema, so it starts no schema-inference Spark job; Spark
+    still lists the files on every load, so rows are never stale. Any
+    change to the files — a rewrite, an appended or deleted file, a new
+    deletion-vector epoch — changes the signature and the next load
+    infers again. The memo covers the plain columnar read only: text
+    formats and ``merge_schema`` infer on every load as before. Schemas
+    are inferred under the session confs in force at the miss
+    (``ensure_nanos_conf`` pins the one the loads depend on)."""
 
     def __init__(self, spark: SparkSession, directory: str, fmt: str = "parquet",
                  row_mode: str = "strict", schemas: dict | None = None,
@@ -74,7 +115,7 @@ class FileCatalog:
         # type widening at the cost of reading every footer; opt-in
         # because at large file counts that inference pass is real IO.
         self.merge_schema = merge_schema
-        self._columns_cache: dict[str, list[str]] = {}
+        self._schema_memo: dict[str, tuple] = {}
         if row_mode == "permissive" and fmt == "csv":
             # With parser column pruning, arity-malformed rows are only
             # detected when the FULL row parses — a narrow projection would
@@ -87,12 +128,26 @@ class FileCatalog:
         return sorted(p.stem for p in self.directory.glob(f"*.{self.fmt}"))
 
     def columns(self, table: str) -> list[str]:
-        if table not in self._columns_cache:
-            self._columns_cache[table] = self.load(table).columns
-        return self._columns_cache[table]
+        return self.load(table).columns
 
     def _path(self, table: str) -> str:
         return str(self.directory / f"{table}.{self.fmt}")
+
+    def _columnar_read(self, table: str, reader) -> DataFrame:
+        """``reader.load`` through the schema memo (class docstring). The
+        signature is taken BEFORE inference: a write racing the miss can
+        only record a signature that no later state matches, never a
+        current signature with an older schema. Concurrent misses from
+        the steal pool record the same entry twice, harmlessly."""
+        path = self._path(table)
+        sig = file_signature(path)
+        memo = self._schema_memo.get(table)
+        if sig is not None and memo is not None and memo[0] == sig:
+            return reader.schema(memo[1]).load(path)
+        df = reader.load(path)
+        if sig is not None:
+            self._schema_memo[table] = (sig, df.schema)
+        return df
 
     def _text_reader(self, table: str):
         reader = self.spark.read.format(self.fmt)
@@ -195,7 +250,7 @@ class FileCatalog:
                           .schema(self._widened_schema(table))
                           .parquet(self._path(table)))
             else:
-                df = reader.load(self._path(table))
+                df = self._columnar_read(table, reader)
         # a deletion-vector table (merge-on-read CDC sink) resolves its
         # committed epochs at read time, so every catalog consumer —
         # including sync_deletes' sink-key diff — sees the merged view
@@ -383,7 +438,9 @@ class FileCatalog:
         return StructType([merged[n] for n in order])
 
     def structure(self) -> str:
-        """Whole-catalog DDL text (reference GetStructure)."""
+        """Whole-catalog DDL text (reference GetStructure). Schemas come
+        through :meth:`load`'s memo, so on a warm catalog of unchanged
+        columnar tables this pass starts no schema-inference job."""
         from klepto_spark.sinks.ddl import create_table_sql
         return "\n\n".join(
             create_table_sql(t, self.load(t).schema) for t in self.tables())

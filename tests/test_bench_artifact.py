@@ -7,7 +7,7 @@ import os
 
 import pytest
 
-from bench import outlier_queries
+from bench import cpus_stamp, outlier_queries
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -111,4 +111,18 @@ def test_bench_detail_carries_cold_sample_and_cpus():
         # that it is a real measurement
         assert isinstance(c, (int, float)) and c > 0, name
     assert "cpus" in detail and "defaultParallelism" in detail
+    assert detail["cpus"] != "*"
     assert detail["defaultParallelism"] >= 1
+
+
+@pytest.mark.parametrize("env", [None, "*", "3"])
+def test_cpus_stamp_is_never_a_wildcard(monkeypatch, env):
+    """An unset or ``*`` SPARK_GRAFT_CPUS runs local[*]; the artifact
+    must still name a core count."""
+    if env is None:
+        monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    else:
+        monkeypatch.setenv("SPARK_GRAFT_CPUS", env)
+    stamp = cpus_stamp()
+    assert stamp != "*"
+    assert stamp == (env if env == "3" else str(os.cpu_count()))

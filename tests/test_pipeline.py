@@ -155,3 +155,24 @@ def test_pii_redact_pipeline_stage_matches_sql_twin(spark, sf_dir):
                 f"read_parquet('{sf_dir}/customer.parquet')")
     oracle = {r[0]: r[1] for r in con.execute(sql).fetchall()}
     assert oracle == rows
+
+
+def test_pii_redact_keeps_backtick_and_dot_column_names(spark):
+    """Passthrough and masked columns whose names carry a backtick or a
+    dot survive the target projection, the faker projection and the
+    redaction projection under their own names."""
+    src = spark.createDataFrame(
+        [(1, "account 1234567", "a@b.com", 7)],
+        "id int, body string, n string, x int").toDF(
+            "id", "body", "no`te", "a.b")
+    spec = TableSpec(name="t", pii_redact=["body", "no`te"])
+    df = build_table_df(spec, lambda name: src)
+    assert df.columns == ["id", "body", "no`te", "a.b"]
+    row = df.collect()[0]
+    assert (row[0], row[3]) == (1, 7)
+    assert (row[1], row[2]) == ("account <NUM>", "<EMAIL>")
+    faked = build_table_df(TableSpec(name="t", anonymise={"id": "Year"},
+                                     pii_redact=["no`te"]),
+                           lambda name: src)
+    assert faked.columns == ["id", "body", "no`te", "a.b"]
+    assert tuple(faked.collect()[0])[1:] == ("account 1234567", "<EMAIL>", 7)
