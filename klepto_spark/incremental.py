@@ -109,6 +109,13 @@ def _with_range(tspec: TableSpec, pred: str) -> TableSpec:
     return replace(tspec, filter=filt)
 
 
+def _with_table(spec: Spec, tspec: TableSpec) -> Spec:
+    """``spec`` with ``tspec`` in place of its table of the same name."""
+    return Spec(matchers=dict(spec.matchers), locale=spec.locale,
+                tables=[tspec] + [t for t in spec.tables
+                                  if t.name != tspec.name])
+
+
 @dataclass
 class CdcTable:
     """CDC capture config for one table.
@@ -178,7 +185,16 @@ def steal_cdc(spec: Spec, source, sink_dsn: str, *,
     routes soft-deleted rows in the capture window to sink-side removal,
     ``sync_deletes`` diffs key sets to catch hard deletes. Remaining
     limit: ``mark_col`` ties across versions of one key merge arbitrarily
-    — use a strictly-monotonic version column."""
+    — use a strictly-monotonic version column.
+
+    Each window merges in ONE Spark query: ``rows``/``deleted_rows`` come
+    from an observation on the deduped window (every sink runs its upsert
+    side, so it fires inside the merge), not a cached count pass; only
+    ``sync_deletes`` persists and counts its deletes, to skip the rewrite
+    when nothing vanished. Trade-off: a ``tombstone`` table always hands
+    its sink a ``deletes`` frame, possibly empty — JDBC then stages an
+    empty delete table and merge-on-read may write an empty DV part,
+    neither of which changes the table."""
     from pyspark.sql import Observation, Window, functions as F
 
     from klepto_spark.sinks.writers import merge_table
@@ -194,7 +210,7 @@ def steal_cdc(spec: Spec, source, sink_dsn: str, *,
         try:
             stored = marks.get(table)
             new_max = (source.load(table)
-                       .agg(_agg_max(cdc.mark_col)).first()["m"])
+                       .agg(F.max(cdc.mark_col).alias("m")).first()["m"])
             window_open = not (new_max is None or
                                (stored is not None
                                 and _to_json(new_max) == stored))
@@ -202,7 +218,6 @@ def steal_cdc(spec: Spec, source, sink_dsn: str, *,
                 res.rows, res.skipped = 0, stored is not None
                 continue
             base_tspec = spec.find_table(table) or TableSpec(name=table)
-            tspec = base_tspec
             if window_open:
                 upper = f"{table}.{cdc.mark_col} <= {_literal(new_max)}"
                 pred = (upper if stored is None else
@@ -212,12 +227,9 @@ def steal_cdc(spec: Spec, source, sink_dsn: str, *,
                 # unchanged watermark, but sync_deletes still needs a
                 # pass: hard deletes never bump max(mark_col)
                 pred = "1=0"
-            tspec = _with_range(tspec, pred)
-            run_spec = Spec(matchers=dict(spec.matchers),
-                            tables=[tspec] + [t for t in spec.tables
-                                              if t.name != table],
-                            locale=spec.locale)
-            df = build_table_df(tspec, source.load, spec=run_spec,
+            tspec = _with_range(base_tspec, pred)
+            df = build_table_df(tspec, source.load,
+                                spec=_with_table(spec, tspec),
                                 join_strategy=join_strategy, seed=seed)
             masked = [c for c in [*cdc.keys, cdc.mark_col]
                       if c in tspec.anonymise]
@@ -235,12 +247,15 @@ def steal_cdc(spec: Spec, source, sink_dsn: str, *,
             w = Window.partitionBy(*cdc.keys).orderBy(F.desc(cdc.mark_col))
             df = (df.withColumn("_cdc_rn", F.row_number().over(w))
                   .filter(F.col("_cdc_rn") == 1).drop("_cdc_rn"))
+            flag = F.coalesce(F.expr(cdc.tombstone or "false"), F.lit(False))
+            obs = Observation()
+            df = df.observe(obs, F.count(F.lit(1)).alias("rows"),
+                            F.count_if(flag).alias("deleted"))
             dels = None
             if cdc.tombstone:
                 # soft-deleted rows ride the capture window (their
                 # mark_col bumped); route their keys to removal instead
                 # of merging the tombstoned row into the sink
-                flag = F.coalesce(F.expr(cdc.tombstone), F.lit(False))
                 dels = df.filter(flag).select(*cdc.keys)
                 df = df.filter(~flag)
             if cdc.sync_deletes:
@@ -253,30 +268,24 @@ def steal_cdc(spec: Spec, source, sink_dsn: str, *,
                     # the configured subset is removed too. Keys-only on
                     # both sides: column-pruned scans, the shuffle
                     # carries keys — O(|keys|), not O(table).
-                    base_run = Spec(matchers=dict(spec.matchers),
-                                    tables=[base_tspec] +
-                                    [t for t in spec.tables
-                                     if t.name != table],
-                                    locale=spec.locale)
                     live = build_table_df(
-                        base_tspec, source.load, spec=base_run,
+                        base_tspec, source.load,
+                        spec=_with_table(spec, base_tspec),
                         join_strategy=join_strategy, seed=seed,
                         anonymise=False).select(*cdc.keys)
                     vanished = sink_keys.join(live, on=cdc.keys,
                                               how="left_anti")
                     dels = (vanished if dels is None
                             else dels.unionByName(vanished))
-            if dels is not None:
-                dels = dels.persist()
-                res.deleted_rows = dels.count()
-                if res.deleted_rows == 0:
-                    dels.unpersist()
-                    dels = None
-            if not window_open and dels is None:
-                res.rows, res.skipped = 0, True
-                continue
-            obs = Observation()
-            df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
+                if dels is not None:
+                    dels = dels.persist()
+                    res.deleted_rows = dels.count()
+                    if res.deleted_rows == 0:
+                        dels.unpersist()
+                        dels = None
+                if not window_open and dels is None:
+                    res.rows, res.skipped = 0, True
+                    continue
             try:
                 merge_table(df, sink_dsn, table, cdc.keys, deletes=dels,
                             partition_buckets=cdc.partition_buckets,
@@ -284,7 +293,10 @@ def steal_cdc(spec: Spec, source, sink_dsn: str, *,
             finally:
                 if dels is not None:
                     dels.unpersist()
-            res.rows = obs.get["rows"]
+            seen = obs.get
+            res.rows = seen["rows"] - seen["deleted"]
+            if not cdc.sync_deletes:
+                res.deleted_rows = seen["deleted"]
             if window_open:
                 marks[table] = _to_json(new_max)
                 save_marks(state_path, marks)
@@ -302,21 +314,15 @@ def steal_cdc(spec: Spec, source, sink_dsn: str, *,
     return report
 
 
-def _agg_max(col: str):
-    from pyspark.sql import functions as F
-    return F.max(col).alias("m")
-
-
 def _sink_keys(spark, sink_dsn: str, table: str, keys: list[str]):
-    """Current sink-side key set, or None before the first publish."""
+    """Current sink-side key set, or None while the table is absent (a
+    missing sink dir lists no tables). Read errors propagate: an
+    unreadable sink must fail the table, not turn hard deletes off."""
     from klepto_spark.sources.catalog import connect
-    try:
-        cat = connect(spark, sink_dsn)
-        if table not in cat.tables():
-            return None
-        return cat.load(table).select(*keys)
-    except Exception:  # noqa: BLE001 — missing sink dir = first run
+    cat = connect(spark, sink_dsn)
+    if table not in cat.tables():
         return None
+    return cat.load(table).select(*keys)
 
 
 def steal_incremental(spec: Spec, source, sink_dsn: str, *,
@@ -364,11 +370,8 @@ def steal_incremental(spec: Spec, source, sink_dsn: str, *,
             tspec = _with_range(
                 tspec, f"{table}.{col} > {_from_json(stored)} AND {upper}")
             mode = "append"
-        run_spec = Spec(matchers=dict(spec.matchers),
-                        tables=[tspec] + [t for t in spec.tables
-                                          if t.name != table],
-                        locale=spec.locale)
-        part = steal(run_spec, source, sink_dsn, concurrency=concurrency,
+        part = steal(_with_table(spec, tspec), source, sink_dsn,
+                     concurrency=concurrency,
                      strict=strict, join_strategy=join_strategy, seed=seed,
                      mode=mode, only_tables=[table], data_only=True)
         report.tables.extend(part.tables)

@@ -173,11 +173,8 @@ def merge_files_dv(df: DataFrame, directory: str, table: str, fmt: str,
             merge_files_partitioned(df, directory, table, fmt, keys,
                                     n_buckets=n_buckets, deletes=deletes)
         else:
-            first = df
-            if deletes is not None:
-                first = first.join(deletes.select(*keys).distinct(),
-                                   on=keys, how="left_anti")
-            write_files(first, directory, table, fmt, mode="overwrite")
+            # nothing to delete from yet; same-window upserts win (_resolve)
+            write_files(df, directory, table, fmt, mode="overwrite")
             _save_schema_contract(jvm, fs, tgt, df.schema)
         _write_json(fs, _meta_path(jvm, tgt), {"keys": list(keys)})
         return
@@ -267,8 +264,8 @@ def _resolve(base: DataFrame, upserts: DataFrame | None,
         return base.select(*cols)
     if upserts is None:
         # delete-only history: every event key is dead, nothing revives
-        gone = dv.select(*keys).distinct()
-        return base.join(gone, on=keys, how="left_anti").select(*cols)
+        return base.join(dv.select(*keys), on=keys,
+                         how="left_anti").select(*cols)
     from pyspark.sql.window import Window
     events = upserts.withColumn("_dv_tomb", F.lit(False))
     if dv is not None:
@@ -281,8 +278,8 @@ def _resolve(base: DataFrame, upserts: DataFrame | None,
     live = latest.filter(~F.col("_dv_tomb")).select(*cols)
     # the event-key set is the pending CDC volume — small by compaction
     # contract; AQE picks broadcast vs shuffled anti-join by its size
-    gone = events.select(*keys).distinct()
-    kept = base.join(gone, on=keys, how="left_anti").select(*cols)
+    kept = base.join(events.select(*keys), on=keys,
+                     how="left_anti").select(*cols)
     return kept.unionByName(live)
 
 

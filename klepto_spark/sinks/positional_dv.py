@@ -158,8 +158,7 @@ def positional_delete(spark: SparkSession, directory: str, table: str,
     else:
         if not keys:
             raise ValueError("keys_df needs the join column names in keys=")
-        hit = base.join(keys_df.select(*keys).distinct(), on=keys,
-                        how="left_semi")
+        hit = base.join(keys_df.select(*keys), on=keys, how="left_semi")
     epochs = committed_pdv_epochs(jvm, fs, tgt)
     # already-deleted positions must not be re-recorded (idempotent deletes)
     paths = _epoch_paths(jvm, tgt, epochs)

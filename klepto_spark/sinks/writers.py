@@ -271,6 +271,9 @@ def merge_files(df: DataFrame, directory: str, table: str, fmt: str,
     removes those keys in the SAME publish — upserts and deletes land
     together or not at all.
 
+    No ``distinct()`` on the anti-join's key side: duplicate keys cannot
+    change its result, and it would add an aggregate and a shuffle.
+
     The rewrite cost is the table, not the delta — the honest baseline
     for keyed merge on immutable files. When the target is already a
     bucket-partitioned layout (written by :func:`merge_files_partitioned`),
@@ -303,7 +306,7 @@ def merge_files(df: DataFrame, directory: str, table: str, fmt: str,
         gone = df.select(*keys)
         if deletes is not None:
             gone = gone.unionByName(deletes.select(*keys))
-        kept = current.join(gone.distinct(), on=keys, how="left_anti")
+        kept = current.join(gone, on=keys, how="left_anti")
         merged = kept.unionByName(df)
     # the staged write reads the live directory lazily BEFORE the rename
     # publishes, so read-rewrite-swap is safe in one pass
@@ -494,11 +497,9 @@ def merge_files_partitioned(df: DataFrame, directory: str, table: str,
         writer.save(path)
 
     if not fs.exists(tgt):
-        delta = df.withColumn(BUCKET_COL, bucket_expr(keys, n_buckets))
-        if deletes is not None:
-            delta = delta.join(deletes.select(*keys).distinct(), on=keys,
-                               how="left_anti")
-        _write(delta, target)
+        # nothing to delete from yet; same-window upserts are kept
+        _write(df.withColumn(BUCKET_COL, bucket_expr(keys, n_buckets)),
+               target)
         _save_schema_contract(jvm, fs, tgt, df.schema)
         _save_layout(jvm, fs, tgt, n_buckets, keys)
         return
@@ -557,7 +558,7 @@ def merge_files_partitioned(df: DataFrame, directory: str, table: str,
     gone = delta.select(*keys)
     if deletes is not None:
         gone = gone.unionByName(deletes.select(*keys))
-    kept = current.join(gone.distinct(), on=keys, how="left_anti")
+    kept = current.join(gone, on=keys, how="left_anti")
     merged = kept.unionByName(delta.select(*kept.columns))
 
     staging = jvm.org.apache.hadoop.fs.Path(target + STAGING_SUFFIX)

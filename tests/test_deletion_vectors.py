@@ -401,3 +401,25 @@ def test_vacuum_aborts_retirement_when_publish_rename_fails(
     assert dv.vacuum_epochs(spark, str(tmp_path), "t", "parquet",
                             retain_epochs=1) == 1
     assert _view(spark, tmp_path) == before
+
+
+@pytest.mark.parametrize("existing", [False, True], ids=["fresh", "existing"])
+@pytest.mark.parametrize("layout", ["plain", "bucketed", "dv"])
+def test_upsert_beats_delete_of_same_window(spark, tmp_path, layout,
+                                            existing):
+    """A key both upserted and deleted in one merge keeps the upsert, on
+    every file layout and whether or not the target exists yet."""
+    from klepto_spark.sinks.writers import merge_table
+    opts = {"bucketed": {"partition_buckets": 4},
+            "dv": {"merge_on_read": True}}.get(layout, {})
+    dsn = f"parquet://{tmp_path}"
+    want = {1: "a", 2: "b"}
+    if existing:
+        merge_table(_df(spark, [(1, "old", 0.0), (3, "c", 3.0)]), dsn, "t",
+                    ["id"], **opts)
+        want[3] = "c"
+    merge_table(_df(spark, [(1, "a", 1.0), (2, "b", 2.0)]), dsn, "t",
+                ["id"], deletes=_keys(spark, [1]), **opts)
+    got = {r["id"]: r["name"]
+           for r in FileCatalog(spark, str(tmp_path)).load("t").collect()}
+    assert got == want

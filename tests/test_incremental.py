@@ -4,6 +4,8 @@ additionally re-captures in-place updates and merges latest-wins by key."""
 
 import json
 
+import pytest
+
 from klepto_spark.config import Spec, TableSpec
 from klepto_spark.incremental import (
     CdcTable,
@@ -304,3 +306,151 @@ def test_cdc_partitioned_merge_layout(spark, tmp_path):
     got = spark.read.parquet(target)
     assert got.count() == 40
     assert got.filter("id = 3").first()["name"] == "UPDATED"
+
+
+def _derby_dsn(spark, tmp_path):
+    try:
+        spark._sc._jvm.java.lang.Class.forName(
+            "org.apache.derby.jdbc.EmbeddedDriver")
+    except Exception:  # noqa: BLE001
+        pytest.skip("no Derby driver on the classpath")
+    return f"derby:///{str(tmp_path / 'sinkdb').lstrip('/')}?create=true"
+
+
+def _sink_rows(spark, tmp_path, kind, dsn):
+    """{id: name} of table t as a reader of the sink sees it."""
+    if kind == "jdbc":
+        from klepto_spark import jdbc as J
+        from klepto_spark.sources.dsn import parse
+        return {int(r[0]): r[1] for r in J.query_rows(
+            spark, parse(dsn), 'SELECT "id", "name" FROM t')}
+    return {r.id: r.name for r in
+            FileCatalog(spark, str(tmp_path / "out")).load("t").collect()}
+
+
+def _cdc_run(spark, tmp_path, dsn, cdc):
+    rep = steal_cdc(Spec(), _cat(spark, tmp_path), dsn,
+                    state_path=str(tmp_path / "marks.json"), tables=cdc)
+    return {t.table: t for t in rep.tables}["t"]
+
+
+@pytest.mark.parametrize("kind", ["plain", "buckets", "mor", "jdbc"])
+def test_cdc_tombstone_counts_per_sink(spark, tmp_path, kind):
+    """rows/deleted_rows come from one observation on the merge query and
+    match what each sink ends up holding: a first window's tombstones
+    are counted and never written, a later window's tombstones remove
+    their keys, and a window with no tombstones (an empty delete frame)
+    leaves the table exactly right."""
+    opts = {"buckets": {"partition_buckets": 4},
+            "mor": {"merge_on_read": True}}.get(kind, {})
+    cdc = {"t": CdcTable(mark_col="ver", keys=["id"], tombstone="deleted",
+                         **opts)}
+    dsn = (_derby_dsn(spark, tmp_path) if kind == "jdbc"
+           else f"parquet://{tmp_path}/out")
+    want = {i: f"n{i}" for i in range(1, 41)}
+
+    _write_tomb(spark, tmp_path,
+                [(i, 1, f"n{i}", False) for i in range(1, 41)]
+                + [(41, 1, "x", True), (42, 1, "y", True)])
+    res = _cdc_run(spark, tmp_path, dsn, cdc)
+    assert (res.rows, res.deleted_rows, res.error) == (40, 2, None)
+    assert _sink_rows(spark, tmp_path, kind, dsn) == want
+
+    _write_tomb(spark, tmp_path, [(3, 2, "U", False), (5, 2, "n5", True),
+                                  (7, 2, "n7", True), (43, 2, "new", False)],
+                mode="append")
+    res = _cdc_run(spark, tmp_path, dsn, cdc)
+    assert (res.rows, res.deleted_rows, res.error) == (2, 2, None)
+    want.update({3: "U", 43: "new"})
+    del want[5], want[7]
+    assert _sink_rows(spark, tmp_path, kind, dsn) == want
+
+    _write_tomb(spark, tmp_path, [(4, 3, "V", False)], mode="append")
+    res = _cdc_run(spark, tmp_path, dsn, cdc)
+    assert (res.rows, res.deleted_rows, res.error) == (1, 0, None)
+    want[4] = "V"
+    assert _sink_rows(spark, tmp_path, kind, dsn) == want
+    if kind == "jdbc":
+        from klepto_spark import jdbc as J
+        from klepto_spark.sinks.writers import STAGING_SUFFIX
+        from klepto_spark.sources.dsn import parse
+        for t in (f"t{STAGING_SUFFIX}", f"t{STAGING_SUFFIX}_d"):
+            assert not J.table_exists(spark, parse(dsn), t)
+    if kind == "mor":
+        from klepto_spark.sinks.deletion_vectors import pending_epochs
+        epochs = pending_epochs(spark, str(tmp_path / "out"), "t", "parquet")
+        assert [(e["delta_rows"], e["dv_rows"]) for e in epochs] == [
+            (2, 2), (1, 0)]
+
+
+def _group_jobs(spark, group):
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+# Spark jobs of a warm tombstone window into an existing plain sink,
+# counted with the status tracker (13 with a cached tombstone count and
+# a distinct() in front of the anti-join)
+JOBS_BOUND = 8
+
+
+def test_cdc_tombstone_window_merges_in_one_query(spark, tmp_path):
+    """A warm tombstone window into an existing plain parquet sink runs
+    no separate count pass over its deletes and persists nothing: the
+    source max, the window read and the merge write are all it costs."""
+    cdc = {"t": CdcTable(mark_col="ver", keys=["id"], tombstone="deleted")}
+    out = f"parquet://{tmp_path}/out"
+    _write_tomb(spark, tmp_path,
+                [(i, 1, f"n{i}", False) for i in range(200)])
+    _cdc_run(spark, tmp_path, out, cdc)
+    _write_tomb(spark, tmp_path, [(i, 2, "u", i % 40 == 0)
+                                  for i in range(0, 200, 10)], mode="append")
+
+    sc = spark.sparkContext
+    group = "cdc-one-query-probe"
+    persisted = sc._jsc.getPersistentRDDs().size()
+    before = _group_jobs(spark, group)
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        res = _cdc_run(spark, tmp_path, out, cdc)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = _group_jobs(spark, group) - before
+    assert (res.rows, res.deleted_rows, res.error) == (15, 5, None)
+    assert jobs <= JOBS_BOUND, jobs
+    assert sc._jsc.getPersistentRDDs().size() == persisted
+    got = spark.read.parquet(f"{tmp_path}/out/t.parquet")
+    assert got.count() == 195
+
+
+def test_cdc_sync_deletes_fails_on_unreadable_sink(spark, tmp_path):
+    """An existing sink table that cannot be read fails the table under
+    strict mode instead of silently turning off hard-delete detection."""
+    _write_cdc(spark, tmp_path, [(1, 10, "a", 1.0), (2, 10, "b", 2.0)])
+    state = str(tmp_path / "marks.json")
+    out = f"parquet://{tmp_path}/out"
+    cdc = {"t": CdcTable(mark_col="ver", keys=["id"], sync_deletes=True)}
+    steal_cdc(Spec(), _cat(spark, tmp_path), out, state_path=state,
+              tables=cdc)
+    parts = list((tmp_path / "out" / "t.parquet").glob("part-*"))
+    assert parts
+    for p in parts:
+        p.write_bytes(b"not a parquet file")
+    with pytest.raises(RuntimeError, match="cdc steal failed"):
+        steal_cdc(Spec(), _cat(spark, tmp_path), out, state_path=state,
+                  tables=cdc)
+
+
+def test_cdc_sync_deletes_missing_sink_dir_is_first_run(spark, tmp_path):
+    """A sink directory that does not exist yet is a first run, not an
+    error: the window lands in full and nothing is deleted."""
+    _write_cdc(spark, tmp_path, [(1, 10, "a", 1.0), (2, 10, "b", 2.0)])
+    out = f"parquet://{tmp_path}/missing/out"
+    cdc = {"t": CdcTable(mark_col="ver", keys=["id"], sync_deletes=True)}
+    rep = steal_cdc(Spec(), _cat(spark, tmp_path), out,
+                    state_path=str(tmp_path / "marks.json"), tables=cdc)
+    res = {t.table: t for t in rep.tables}["t"]
+    assert (res.rows, res.deleted_rows, res.error) == (2, 0, None)
+    got = spark.read.parquet(f"{tmp_path}/missing/out/t.parquet")
+    assert sorted(r.id for r in got.collect()) == [1, 2]
